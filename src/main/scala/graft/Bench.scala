@@ -56,18 +56,23 @@ object Bench {
     * band survived with rm:2 because warmup was equally contaminated).
     * Missing/unparseable file ⇒ empty map ⇒ exactly the old behavior;
     * the band never LOWERS a reported time — it only grants a third
-    * measurement pass, still capped at 5 entries. */
-  def loadBands(path: String): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
-      val inQueries = txt.indexOf("\"queries\"") match {
-        case -1 => return Map.empty
-        case i => txt.substring(i)
-      }
-      "\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(inQueries)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    * measurement pass, still capped at 5 entries. Each entry parses on
+    * its own: one malformed number drops that entry, not the map, and a
+    * file that exists but yields no band says so on stderr (the
+    * contamination guard is then off). The band file changes only
+    * together with a quiet full pass in the same commit. */
+  def loadBands(path: String): Map[String, Double] = {
+    val p = scala.util.Try(java.nio.file.Paths.get(path)).toOption
+    val bands = p.flatMap(f => scala.util.Try(new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)).toOption)
+      .flatMap(txt => Some(txt.indexOf("\"queries\"")).filter(_ >= 0).map(txt.substring))
+      .map(inQueries => "\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(inQueries)
+        .flatMap(m => m.group(2).toDoubleOption.map(m.group(1) -> _)).toMap)
+      .getOrElse(Map.empty[String, Double])
+    if (bands.isEmpty && p.exists(java.nio.file.Files.exists(_)))
+      System.err.println(s"[bench] band file $path parsed to no entries; band re-measure is off")
+    bands
+  }
 
   /** One compact JSON line; failed entries carry null and are excluded
     * from the total (BenchSpec pins this). Every entry starts at 2

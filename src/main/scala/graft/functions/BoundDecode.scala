@@ -63,8 +63,19 @@ case class DecodeBoundsExpr(
 
 object BoundDecode {
 
-  /** Kernel shared by the expression's interpreted and codegen paths:
-    * decode every entry of a map<int, binary> against the id→type dict. */
+  /** The per-entry kernel: one bound's `value:<v>;type:<t>` rendering,
+    * or `value:<hex>;type:unknown` for an id the dict does not hold. */
+  def renderBound(dict: Map[Int, IcebergType], id: Int, bytes: Array[Byte]): String =
+    dict.get(id) match {
+      case Some(t) => SingleValueCodec.render(t, bytes)
+      case None =>
+        val hex = if (bytes == null) "" else bytes.map("%02x".format(_)).mkString
+        s"value:$hex;type:unknown"
+    }
+
+  /** Decode every entry of a map<int, binary> against the id→type dict —
+    * what the expression's interpreted and codegen paths and the
+    * `manifest2json` renderer in the Spark driver all run. */
   def decodeMapData(
       dict: Map[Int, IcebergType],
       m: org.apache.spark.sql.catalyst.util.MapData): org.apache.spark.sql.catalyst.util.MapData = {
@@ -77,13 +88,7 @@ object BoundDecode {
     while (i < n) {
       val id = keys.getInt(i)
       val bytes = if (values.isNullAt(i)) null else values.getBinary(i)
-      val rendered = dict.get(id) match {
-        case Some(t) => SingleValueCodec.render(t, bytes)
-        case None =>
-          val hex = if (bytes == null) "" else bytes.map("%02x".format(_)).mkString
-          s"value:$hex;type:unknown"
-      }
-      out(i) = org.apache.spark.unsafe.types.UTF8String.fromString(rendered)
+      out(i) = org.apache.spark.unsafe.types.UTF8String.fromString(renderBound(dict, id, bytes))
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
@@ -96,6 +101,12 @@ object BoundDecode {
     * private[sql] in Spark 4). Types never contain ';' or '='. */
   def dictToString(idToType: Map[Int, String]): String =
     idToType.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(";")
+
+  /** The dict a [[decodeBounds]] column decodes with: the id→type
+    * strings through the same literal round trip, so an unparseable type
+    * renders as `type:unknown` on every route. */
+  def dictOf(idToType: Map[Int, String]): Map[Int, IcebergType] =
+    dictFromString(dictToString(idToType))
 
   def dictFromString(s: String): Map[Int, IcebergType] =
     if (s.isEmpty) Map.empty

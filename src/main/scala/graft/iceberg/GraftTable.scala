@@ -1,5 +1,6 @@
 package graft.iceberg
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
@@ -129,7 +130,8 @@ object GraftTable {
       snap: Snapshot): DataFrame = {
     val listPath = snap.manifestList.getOrElse(
       throw new IllegalArgumentException(s"snapshot ${snap.snapshotId} has no manifest-list"))
-    readFromInfos(spark, meta, ManifestListReader.read(listPath))
+    val conf = spark.sessionState.newHadoopConf()
+    readFromInfos(spark, meta, ManifestListReader.read(listPath, conf), conf)
   }
 
   /** Strip the URI scheme+authority off a file-path column: manifest
@@ -144,7 +146,9 @@ object GraftTable {
     * for 10⁴+ manifests:
     *
     *   - every manifest opens CONCURRENTLY (Par.inParallel) — planning
-    *     wall-clock tracks the slowest manifest, not the manifest count;
+    *     wall-clock tracks the slowest manifest, not the manifest count —
+    *     through the one Hadoop `conf` the caller resolved for the pass
+    *     (it also read `infos` with it);
     *   - an entry-level null sequence number INHERITS the manifest-list's
     *     field-515 number (the v2 inheritance rule — foreign tables leave
     *     ADDED entries null and let the list carry the commit's number);
@@ -160,7 +164,7 @@ object GraftTable {
     *     overwhelmingly common case) get exactly one anti-join, however
     *     many delete commits are pending. */
   private def readFromInfos(spark: SparkSession, meta: TableMetadata,
-      infos: Seq[ManifestListReader.ManifestFileInfo],
+      infos: Seq[ManifestListReader.ManifestFileInfo], conf: Configuration,
       restrictData: Seq[(ManifestWriter.EntryData, Long)] =>
         Seq[(ManifestWriter.EntryData, Long)] = identity,
       restrictEq: Seq[(ManifestWriter.EntryData, Long)] =>
@@ -178,7 +182,7 @@ object GraftTable {
     val minDataSeq = infos.filter(_.content == 0)
       .map(_.minSequenceNumber).minOption.getOrElse(Long.MaxValue)
     val opened = infos.filter(i => i.content == 0 || i.sequenceNumber >= minDataSeq)
-    val byManifest = Par.inParallel(opened)(i => (i, ManifestWriter.read(i.path)))
+    val byManifest = Par.inParallel(opened)(i => (i, ManifestWriter.read(i.path, conf)))
     // live (entry, sequence) per list-content route; DELETED entries
     // (status 2) drop out; sequence inherits list field 515 when null.
     // Entry identity is (path, blob offset), NOT path alone: one v3
@@ -236,18 +240,29 @@ object GraftTable {
     * serialized into the footer at write time (what inference itself
     * prefers); falls back to the standard parquet converter under the
     * session's conversion flags. `asNullable` matches what file-source
-    * inference returns. */
-  private[graft] def footerSparkSchema(path: String): StructType = {
+    * inference returns.
+    *
+    * Callers on `Par` pool threads pass the session's Hadoop and SQL
+    * confs captured on their calling thread: a pool thread may have no
+    * active session, and `SQLConf.get` there is the default conf, which
+    * drops the session's conversion flags (`spark.sql.legacy.parquet.
+    * nanosAsLong`, which Sessions sets, or `binaryAsString`). */
+  private[graft] def footerSparkSchema(path: String): StructType =
+    footerSparkSchema(path, HadoopConfs.active(),
+      org.apache.spark.sql.internal.SQLConf.get)
+
+  private[graft] def footerSparkSchema(path: String, conf: Configuration,
+      sqlConf: org.apache.spark.sql.internal.SQLConf): StructType = {
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), HadoopConfs.active()))
+        new org.apache.hadoop.fs.Path(path), conf))
     try {
       val md = r.getFooter.getFileMetaData
       val raw = Option(md.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
         .flatMap(j => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(j)
           .asInstanceOf[StructType]).toOption)
         .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)
+          .ParquetToSparkSchemaConverter(sqlConf)
           .convert(md.getSchema))
       def nullify(dt: org.apache.spark.sql.types.DataType)
           : org.apache.spark.sql.types.DataType = dt match {
@@ -420,10 +435,13 @@ object GraftTable {
     // column set per delete file: KB-scale DRIVER footer reads (concurrent)
     // — the schema rides along so the grouped read below skips the
     // per-group schema-inference job
-    val eqGroups = Par.inParallel(eqEntries)(e =>
-        (footerSparkSchema(e._1.filePath), e))
-      .groupBy(_._1.fieldNames.toSeq).toSeq.sortBy(_._1.mkString(","))
-      .map { case (_, g) => (g.minBy(_._2._1.filePath)._1, g.map(_._2)) }
+    val eqGroups = if (eqEntries.isEmpty) Nil else {
+      val conf = spark.sessionState.newHadoopConf()
+      val sqlConf = spark.sessionState.conf
+      Par.inParallel(eqEntries)(e => (footerSparkSchema(e._1.filePath, conf, sqlConf), e))
+        .groupBy(_._1.fieldNames.toSeq).toSeq.sortBy(_._1.mkString(","))
+        .map { case (_, g) => (g.minBy(_._2._1.filePath)._1, g.map(_._2)) }
+    }
     eqGroups.foldLeft(posApplied) { case (acc, (groupSchema, group)) =>
       val dels = spark.read.schema(groupSchema)
         .parquet(group.map(_._1.filePath).sorted: _*)
@@ -506,6 +524,10 @@ object GraftTable {
     // i93: 3) now runs ONE. Collected across the chain walk below,
     // assembled after it.
     val insertTags = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int, Long)]
+    // one Hadoop conf and one SQL conf for the whole walk, captured on
+    // this thread for every pool-thread manifest and footer read
+    val conf = spark.sessionState.newHadoopConf()
+    val sqlConf = spark.sessionState.conf
     val tagged = chain.zipWithIndex.flatMap { case (s, ordinal) =>
       if (s.operation.contains("replace")) None
       else {
@@ -516,9 +538,9 @@ object GraftTable {
             .withColumn("_commit_snapshot_id", lit(s.snapshotId))
         val listInfos = ManifestListReader.read(s.manifestList.getOrElse(
           throw new IllegalArgumentException(
-            s"snapshot ${s.snapshotId} has no manifest-list")))
+            s"snapshot ${s.snapshotId} has no manifest-list")), conf)
         val added = listInfos.filter(_.addedSnapshotId == s.snapshotId)
-        val byManifest = Par.inParallel(added)(i => (i, ManifestWriter.read(i.path)))
+        val byManifest = Par.inParallel(added)(i => (i, ManifestWriter.read(i.path, conf)))
         def entriesOf(listContent: Int, status: Int, entryContent: Int) =
           (for {
             (i, es) <- byManifest if i.content == listContent
@@ -537,8 +559,8 @@ object GraftTable {
         def parentVisible(restrict: Seq[(ManifestWriter.EntryData, Long)]
             => Seq[(ManifestWriter.EntryData, Long)]): Option[DataFrame] =
           s.parentSnapshotId.flatMap(meta.snapshot).flatMap(_.manifestList).map { pl =>
-            val infos = ManifestListReader.read(pl)
-            val byM = Par.inParallel(infos)(i => (i, ManifestWriter.read(i.path)))
+            val infos = ManifestListReader.read(pl, conf)
+            val byM = Par.inParallel(infos)(i => (i, ManifestWriter.read(i.path, conf)))
             def live(lc: Int, ec: Int) = (for {
               (i, es) <- byM if i.content == lc
               e <- es if e.status != 2 && e.content == ec
@@ -566,7 +588,7 @@ object GraftTable {
           if (eqAdded.isEmpty) None
           else parentVisible(identity).map { vis =>
             val byCols = Par.inParallel(eqAdded)(e =>
-                (footerSparkSchema(e._1.filePath), e._1.filePath))
+                (footerSparkSchema(e._1.filePath, conf, sqlConf), e._1.filePath))
               .groupBy(_._1.fieldNames.toSeq.map(n => histToCur.getOrElse(n, n)))
               .toSeq.sortBy(_._1.mkString(","))
             byCols.map { case (cols, g) =>
@@ -1535,13 +1557,14 @@ object GraftTable {
       sourceFieldId: Int, value: Any): (DataFrame, Int, Int) = {
     val meta = TableMetadata.parseFile(metadataPath)
     val snap = resolveSnapshot(meta, None, None)
-    val all = ManifestListReader.read(snap.manifestList.get)
+    val conf = spark.sessionState.newHadoopConf()
+    val all = ManifestListReader.read(snap.manifestList.get, conf)
     val surviving = ScanPlanning.pruneManifestsByTransform(
-      snap.manifestList.get, meta, sourceFieldId, value)
+      all, meta, sourceFieldId, value)
     val survivingData = surviving.filter(_.content == 0)
     val deletes = surviving.filter(_.content == 1)
     val fieldName = meta.currentSchema.fields.find(_.id == sourceFieldId).get.name
-    val df = readFromInfos(spark, meta, survivingData ++ deletes)
+    val df = readFromInfos(spark, meta, survivingData ++ deletes, conf)
       .filter(col(fieldName) <=> lit(value)) // residual
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
     (df, survivingData.size, all.count(_.content == 0))
@@ -1557,15 +1580,16 @@ object GraftTable {
       : (DataFrame, Int, Int) = {
     val meta = TableMetadata.parseFile(metadataPath)
     val snap = resolveSnapshot(meta, None, None)
-    val all = ManifestListReader.read(snap.manifestList.get)
+    val conf = spark.sessionState.newHadoopConf()
+    val all = ManifestListReader.read(snap.manifestList.get, conf)
     val surviving = ScanPlanning.pruneManifestsByRange(
-      snap.manifestList.get, meta, sourceFieldId, lower, upper)
+      all, meta, sourceFieldId, lower, upper)
     val survivingData = surviving.filter(_.content == 0)
     val deletes = surviving.filter(_.content == 1)
     val fieldName = meta.currentSchema.fields.find(_.id == sourceFieldId).get.name
     val residual = (lower.map(col(fieldName) >= lit(_)) ++
       upper.map(col(fieldName) <= lit(_))).reduceOption(_ && _).getOrElse(lit(true))
-    val df = readFromInfos(spark, meta, survivingData ++ deletes)
+    val df = readFromInfos(spark, meta, survivingData ++ deletes, conf)
       .filter(residual)
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
     (df, survivingData.size, all.count(_.content == 0))
@@ -1604,11 +1628,12 @@ object GraftTable {
     // ONE manifest-list read and one sweep per manifest (readFromInfos
     // also applies its manifest-level dead-delete prune); the range
     // exclusion rides in as restrict hooks over data + equality entries
+    val conf = spark.sessionState.newHadoopConf()
     val infos = refHead(meta, None).toSeq
-      .flatMap(s => ManifestListReader.read(s.manifestList.get))
+      .flatMap(s => ManifestListReader.read(s.manifestList.get, conf))
     val keep = (es: Seq[(ManifestWriter.EntryData, Long)]) =>
       es.filterNot { case (e, _) => excludes(e) }
-    readFromInfos(spark, meta, infos, restrictData = keep, restrictEq = keep)
+    readFromInfos(spark, meta, infos, conf, restrictData = keep, restrictEq = keep)
       .filter(col(field.name) >= lit(lower) && col(field.name) <= lit(upper))
       .select(sparkSchema(meta).fieldNames.map(col).toIndexedSeq: _*)
   }
@@ -1628,13 +1653,15 @@ object GraftTable {
 
   /** [[currentEntries]] generalized to any head snapshot — what lets the
     * DML paths operate on a BRANCH head instead of main's. */
-  private def entriesAt(head: Option[Snapshot], listContent: Int): Seq[ManifestWriter.EntryData] =
+  private def entriesAt(head: Option[Snapshot], listContent: Int): Seq[ManifestWriter.EntryData] = {
+    val conf = HadoopConfs.active()
     Par.inParallel(
       head.toSeq
-        .flatMap(s => ManifestListReader.read(s.manifestList.get))
-        .filter(_.content == listContent))(i => ManifestWriter.read(i.path).map(e =>
+        .flatMap(s => ManifestListReader.read(s.manifestList.get, conf))
+        .filter(_.content == listContent))(i => ManifestWriter.read(i.path, conf).map(e =>
           e.copy(sequenceNumber = Some(e.sequenceNumber.getOrElse(i.sequenceNumber)))))
       .flatten.filter(_.status != 2)
+  }
 
   /** The head a DML operation works against: the named branch's (the ref
     * must exist — a typo must not silently target main) or main's. */
@@ -2034,9 +2061,10 @@ object GraftTable {
     // manifests) — a second serial metadata sweep at 10^4+ manifests
     // would cost more than the rewrite's planning itself
     type TupleTag = (String, Int, Seq[ManifestListWriter.FieldSummary])
+    val sweepConf = spark.sessionState.newHadoopConf()
     val perManifest0: Seq[(Option[TupleTag], Seq[ManifestWriter.EntryData])] =
       Par.inParallel(meta0.currentSnapshot.toSeq
-          .flatMap(s => ManifestListReader.read(s.manifestList.get))
+          .flatMap(s => ManifestListReader.read(s.manifestList.get, sweepConf))
           .filter(_.content == 0)) { i =>
         val tag = for {
           t <- MetadataTables.partitionTuple(meta0, i)
@@ -2044,7 +2072,7 @@ object GraftTable {
         } yield (t, i.specId, ss.map(s => ManifestListWriter.FieldSummary(
           s.containsNull, s.lower.getOrElse(Array.empty),
           s.upper.getOrElse(Array.empty))))
-        (tag, ManifestWriter.read(i.path)
+        (tag, ManifestWriter.read(i.path, sweepConf)
           .map(e => e.copy(sequenceNumber =
             Some(e.sequenceNumber.getOrElse(i.sequenceNumber))))
           .filter(e => e.status != 2 && e.content == 0))
@@ -2210,7 +2238,7 @@ object GraftTable {
       // sequence numbers materialized exactly as entriesAt does
       val infos = carryForward(base)
       val perManifest = Par.inParallel(infos.filter(_.content == 0))(i =>
-        (i, ManifestWriter.read(i.path)
+        (i, ManifestWriter.read(i.path, sweepConf)
           .filter(e => e.status != 2 && e.content == 0)
           .map(e => e.copy(
             sequenceNumber = Some(e.sequenceNumber.getOrElse(i.sequenceNumber))))))
@@ -2708,10 +2736,11 @@ object GraftTable {
     val oldMeta = TableMetadata.parseFile(
       OptimisticCommit.metadataPath(tableDir, result.version - 1))
     val expiredSnaps = oldMeta.snapshots.filter(s => expiredIds(s.snapshotId))
+    val expiryConf = spark.sessionState.newHadoopConf()
     def manifestsOf(snaps: Seq[Snapshot]): (Seq[String], Seq[(String, Long)]) = {
       val lists = snaps.flatMap(_.manifestList).distinct
       val manifests = Par.inParallel(lists)(l =>
-        ManifestListReader.read(l).map(i => (i.path, i.length))).flatten.distinct
+        ManifestListReader.read(l, expiryConf).map(i => (i.path, i.length))).flatten.distinct
       (lists, manifests)
     }
     val (expLists, expManifests) = manifestsOf(expiredSnaps)
@@ -2737,7 +2766,7 @@ object GraftTable {
       if (manifestBytes > threshold) Set.empty
       else {
         def live(ms: Seq[String]): Seq[String] = Par.inParallel(ms)(m =>
-          ManifestWriter.read(m).filter(_.status != 2).map(_.filePath)).flatten
+          ManifestWriter.read(m, expiryConf).filter(_.status != 2).map(_.filePath)).flatten
         val retained = live(retManifests.map(_._1)).map(uriPath).toSet
         live(expManifests.map(_._1)).filterNot(p => retained(uriPath(p))).toSet
       }
@@ -2982,13 +3011,14 @@ object GraftTable {
     * are absent — a fully-deleted partition contributes nothing. */
   private def entriesByTuple(meta: TableMetadata, snap: Snapshot)
       : Option[Map[String, Seq[ManifestWriter.EntryData]]] = {
-    val infos = snap.manifestList.toSeq.flatMap(ManifestListReader.read)
+    val conf = HadoopConfs.active()
+    val infos = snap.manifestList.toSeq.flatMap(ManifestListReader.read(_, conf))
       .filter(_.content == 0)
     if (infos.isEmpty) return None
     val per = Par.inParallel(
       infos.map(i => (MetadataTables.partitionTuple(meta, i), i))) {
       case (t, i) =>
-        t -> ManifestWriter.read(i.path)
+        t -> ManifestWriter.read(i.path, conf)
           .map(e => e.copy(sequenceNumber =
             Some(e.sequenceNumber.getOrElse(i.sequenceNumber))))
           .filter(e => e.status != 2 && e.content == 0)
@@ -3442,13 +3472,14 @@ object GraftTable {
     // tagged with its manifest's partition tuple for the bank refresh.
     // Replace snapshots contribute nothing: their "added" files carry
     // only rows the rewritten files already held.
+    val appendsConf = spark.sessionState.newHadoopConf()
     val newTagged = appends.flatMap { s =>
       val infos = ManifestListReader.read(s.manifestList.getOrElse(
           throw new IllegalStateException(
-            s"append snapshot ${s.snapshotId} has no manifest-list")))
+            s"append snapshot ${s.snapshotId} has no manifest-list")), appendsConf)
         .filter(i => i.content == 0 && i.addedSnapshotId == s.snapshotId)
       Par.inParallel(infos)(i =>
-        ManifestWriter.read(i.path)
+        ManifestWriter.read(i.path, appendsConf)
           .filter(e => e.status == 1 && e.content == 0)
           .map(e => (MetadataTables.partitionTuple(meta, i), e))).flatten
     }.distinctBy(te => uriPath(te._2.filePath))
@@ -3593,9 +3624,10 @@ object GraftTable {
     val meta = TableMetadata.parseFile(metaPath)
     val snapId = meta.currentSnapshotId.getOrElse(
       throw new IllegalArgumentException("cannot analyze a table with no snapshot"))
+    val conf = spark.sessionState.newHadoopConf()
     val infos = meta.currentSnapshot.flatMap(_.manifestList).toSeq
-      .flatMap(ManifestListReader.read)
-    val perManifest = Par.inParallel(infos)(i => (i, ManifestWriter.read(i.path)))
+      .flatMap(ManifestListReader.read(_, conf))
+    val perManifest = Par.inParallel(infos)(i => (i, ManifestWriter.read(i.path, conf)))
       .map { case (i, es) =>
         val live = es.filter(_.status != 2)
         def cnt(c: Int) = live.filter(_.content == c)
@@ -4099,10 +4131,13 @@ object GraftTable {
   def rewriteManifests(spark: SparkSession, tableDir: String)
       : OptimisticCommit.CommitResult = {
     val meta0 = TableMetadata.parseFile(latestMetadataPath(tableDir))
+    // resolved on this thread for every pool-thread manifest/footer read
+    val rewriteConf = spark.sessionState.newHadoopConf()
+    val sqlConf = spark.sessionState.conf
     val legacyEq = meta0.currentSnapshot.toSeq
-      .flatMap(s => ManifestListReader.read(s.manifestList.get))
+      .flatMap(s => ManifestListReader.read(s.manifestList.get, rewriteConf))
       .filter(_.content == 1)
-      .flatMap(i => ManifestWriter.read(i.path))
+      .flatMap(i => ManifestWriter.read(i.path, rewriteConf))
       .filter(e => e.status != 2 && e.content == 2 && e.nullValueCounts.isEmpty)
       .distinctBy(e => uriPath(e.filePath))
     val backfill: Map[String, Map[Int, Long]] =
@@ -4113,7 +4148,7 @@ object GraftTable {
         // its entry carries verbatim and the bank keeps treating it
         // conservatively — the rewrite must not fail over a diagnostic.
         scala.util.Try {
-          val names = footerSparkSchema(e.filePath).fieldNames.toSet
+          val names = footerSparkSchema(e.filePath, rewriteConf, sqlConf).fieldNames.toSet
           val fields = meta0.currentSchema.fields.filter(f => names.contains(f.name))
           uriPath(e.filePath) -> deriveStatsFor(spark, e.filePath, fields)._4
         }.toOption
@@ -4131,7 +4166,7 @@ object GraftTable {
       // each manifest tagged with its partition tuple when it pins one
       val perManifest = Par.inParallel(dataInfos) { i =>
         (i, MetadataTables.partitionTuple(base, i),
-          ManifestWriter.read(i.path).filter(_.status != 2).map(e => e.copy(
+          ManifestWriter.read(i.path, rewriteConf).filter(_.status != 2).map(e => e.copy(
             status = 0,
             snapshotId = if (e.snapshotId == 0L) i.addedSnapshotId else e.snapshotId,
             sequenceNumber = Some(e.sequenceNumber.getOrElse(i.sequenceNumber)))))
@@ -4177,7 +4212,7 @@ object GraftTable {
       // the data side follows) — verbatim unless a pre-110 equality
       // entry needs its null counts backfilled
       val perDelManifest = Par.inParallel(delInfos)(i =>
-        (i, ManifestWriter.read(i.path)))
+        (i, ManifestWriter.read(i.path, rewriteConf)))
       val (delFix, delCarry) = perDelManifest.partition { case (_, es) =>
         es.exists(e => e.status != 2 && e.content == 2 &&
           e.nullValueCounts.isEmpty && backfill.contains(uriPath(e.filePath)))
@@ -4282,8 +4317,9 @@ object GraftTable {
       s"gc.enabled=false on $tableDir (zero-copy snapshot table) — " +
         "the orphan sweep would touch files owned by the source table")
     val lists = meta.snapshots.flatMap(_.manifestList).distinct
+    val listConf = spark.sessionState.newHadoopConf()
     val manifests = Par.inParallel(lists)(l =>
-      ManifestListReader.read(l).map(_.path)).flatten.distinct
+      ManifestListReader.read(l, listConf).map(_.path)).flatten.distinct
     val fs = HadoopConfs.fileSystemFor(tableDir)
     val dataDir = new org.apache.hadoop.fs.Path(s"$tableDir/data")
     if (!fs.exists(dataDir))
@@ -4459,8 +4495,9 @@ object GraftTable {
       .filterNot(p => p == metadataFile || p.endsWith("version-hint.text"))
       .map(TableMetadata.parseHadoop) // log entries may be cross-scheme
     val lists = existing(metas.flatMap(_.snapshots.flatMap(_.manifestList)).distinct)
+    val listConf = spark.sessionState.newHadoopConf()
     val manifests = existing(Par.inParallel(lists)(l =>
-      ManifestListReader.read(l).map(_.path)).flatten.distinct)
+      ManifestListReader.read(l, listConf).map(_.path)).flatten.distinct)
     val stats = existing(metas.flatMap(m => m.statistics ++ m.partitionStatistics)
       .map(_.path).distinct)
     // the content tier is FILE-COUNT-proportional — it never lands on the
@@ -4710,10 +4747,11 @@ object GraftTable {
     val meta0 = TableMetadata.parseFile(metaPath0)
     if (meta0.formatVersion >= 3)
       return deleteWhereDv(spark, tableDir, metaPath0, meta0, predicate, branch)
+    val conf = spark.sessionState.newHadoopConf()
     val scannedE = refHead(meta0, branch).toSeq.flatMap { snap =>
       Par.inParallel(
-          ManifestListReader.read(snap.manifestList.get).filter(_.content == 0))(
-          i => (i, ManifestWriter.read(i.path)))
+          ManifestListReader.read(snap.manifestList.get, conf).filter(_.content == 0))(
+          i => (i, ManifestWriter.read(i.path, conf)))
         .flatMap { case (i, es) =>
           es.filter(e => e.status != 2 && e.content == 0).map(e => (e, i)) }
     }
@@ -4836,10 +4874,11 @@ object GraftTable {
       predicate: org.apache.spark.sql.Column,
       branch: Option[String] = None): OptimisticCommit.CommitResult = {
     import spark.implicits._
+    val conf = spark.sessionState.newHadoopConf()
     val dataE = refHead(meta0, branch).toSeq.flatMap { snap =>
       Par.inParallel(
-          ManifestListReader.read(snap.manifestList.get).filter(_.content == 0))(
-          i => ManifestWriter.read(i.path))
+          ManifestListReader.read(snap.manifestList.get, conf).filter(_.content == 0))(
+          i => ManifestWriter.read(i.path, conf))
         .flatten.filter(e => e.status != 2 && e.content == 0)
     }
     if (dataE.isEmpty)
@@ -4882,9 +4921,9 @@ object GraftTable {
     // the delete manifest's field-507 summary: union of the summaries of
     // the manifests owning the addressed files (same rule as the v2 path)
     val snap0 = refHead(meta0, branch).get // dataE nonEmpty ⇒ a head exists
-    val owners = ManifestListReader.read(snap0.manifestList.get)
+    val owners = ManifestListReader.read(snap0.manifestList.get, conf)
       .filter(_.content == 0)
-    val addressedOwners = Par.inParallel(owners)(i => (i, ManifestWriter.read(i.path)))
+    val addressedOwners = Par.inParallel(owners)(i => (i, ManifestWriter.read(i.path, conf)))
       .filter { case (_, es) => es.exists(e => e.status != 2 && covered(norm(e.filePath))) }
       .map(_._1).distinctBy(_.path)
     val delSummary = ScanPlanning.unionSummaries(meta0, addressedOwners)

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.hadoop.conf.Configuration
 
 /** Driver-side reader for a snapshot's manifest-list container — the
   * `manifest_file` records ManifestListWriter emits (core v1 fields, the
@@ -41,9 +42,13 @@ object ManifestListReader {
     val arr = new Array[Byte](bb.remaining()); bb.get(arr); arr
   }
 
-  def read(listPath: String): Seq[ManifestFileInfo] = {
-    val in = new java.io.BufferedInputStream(
-      HadoopConfs.fileSystemFor(listPath).open(new org.apache.hadoop.fs.Path(listPath)))
+  def read(listPath: String): Seq[ManifestFileInfo] = read(listPath, HadoopConfs.active())
+
+  /** `conf`: the Hadoop conf the calling planning pass resolved once (see
+    * ManifestWriter.read). */
+  def read(listPath: String, conf: Configuration): Seq[ManifestFileInfo] = {
+    val p = new org.apache.hadoop.fs.Path(listPath)
+    val in = new java.io.BufferedInputStream(HadoopConfs.fileSystemFor(p, conf).open(p))
     val stream =
       try new DataFileStream[GenericRecord](in,
         new GenericDatumReader[GenericRecord](

@@ -11,14 +11,17 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Distributed scan of Iceberg manifest files (Avro object-container files
-  * of `manifest_entry` records).
+  * of `manifest_entry` records) — the multi-manifest surface behind the
+  * `files` metadata table, ScanPlanning.planFiles and the i-entries.
   *
-  * Replaces the reference's single-threaded pull loop
-  * (/root/reference/src/main/java/dev/liliwei/iceberg/tool/ManifestFileReadTool.java:140-153)
-  * with one Spark task per manifest file — exactly Iceberg's own scan-planning
+  * One Spark task per manifest file — exactly Iceberg's own scan-planning
   * granularity: a 100 TB table has thousands of manifests, each small (KB–MB),
   * so per-file tasks parallelize planning across the cluster while a single
-  * manifest never needs splitting.
+  * manifest never needs splitting. Callers that read ONE manifest, or a
+  * planning pass's handful, stay in the Spark driver — a job's fixed cost
+  * is two orders of magnitude above a KB-scale decode: `manifest2json`
+  * streams its container with `DataFileStream` (cli.ManifestToJsonTool),
+  * and planning passes use ManifestWriter.read with one Hadoop conf.
   *
   * Files open through the Hadoop FileSystem API (parity with
   * /root/reference/src/main/java/dev/liliwei/iceberg/tool/Util.java:41-56), so
@@ -91,13 +94,5 @@ object ManifestReader {
         } finally { stream.close(); in.close() }
       }
     spark.createDataFrame(rdd, structType)
-  }
-
-  /** Entries with a `limit` short-circuit (parity with `--head`,
-    * ManifestFileReadTool.java:145-147 — Spark's LocalLimit stops the scan
-    * the same way the reference's loop guard does). */
-  def entriesHead(spark: SparkSession, paths: Seq[String], head: Long): DataFrame = {
-    val df = entries(spark, paths)
-    if (head == Long.MaxValue) df else df.limit(head.min(Int.MaxValue.toLong).toInt)
   }
 }

@@ -8,6 +8,7 @@ import org.apache.avro.Schema
 import org.apache.avro.SchemaBuilder
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.hadoop.conf.Configuration
 
 /** Manifest sink: writes `manifest_entry` records — core v1 fields plus
   * the binary bound-statistics maps in Iceberg's map-as-array-of-k/v-
@@ -150,12 +151,20 @@ object ManifestWriter {
     * writer schema may carry many more fields; ours projects the core
     * subset by name). KB-scale metadata: this is the same driver-side
     * boundary Iceberg's planner uses; the distributed path is
-    * ManifestReader.entries. */
-  def read(path: String): Seq[EntryData] = {
+    * ManifestReader.entries.
+    *
+    * One-off callers resolve the session's Hadoop conf per call; a
+    * planning pass that opens many manifests resolves it once on its
+    * calling thread and passes it to the two-argument form, so pool
+    * threads neither copy the session conf nor depend on an active
+    * session. */
+  def read(path: String): Seq[EntryData] = read(path, HadoopConfs.active())
+
+  def read(path: String, conf: Configuration): Seq[EntryData] = {
     import org.apache.avro.file.DataFileStream
     import org.apache.avro.generic.GenericDatumReader
-    val in = new java.io.BufferedInputStream(
-      HadoopConfs.fileSystemFor(path).open(new org.apache.hadoop.fs.Path(path)))
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = new java.io.BufferedInputStream(HadoopConfs.fileSystemFor(p, conf).open(p))
     val stream =
       try new DataFileStream[GenericRecord](in,
         new GenericDatumReader[GenericRecord](null: Schema, entrySchema))

@@ -55,7 +55,8 @@ object MetadataTables {
     * a snapshot without a list contributes nothing. */
   def allManifests(spark: SparkSession, meta: TableMetadata): DataFrame = {
     import spark.implicits._
-    meta.snapshots.flatMap(s => s.manifestList.toSeq.flatMap(ManifestListReader.read)
+    val conf = spark.sessionState.newHadoopConf()
+    meta.snapshots.flatMap(s => s.manifestList.toSeq.flatMap(ManifestListReader.read(_, conf))
         .map(i => (s.snapshotId, i.path, i.length, i.content, i.specId,
           i.addedSnapshotId, i.sequenceNumber)))
       .toDF("reference_snapshot_id", "path", "length", "content", "partition_spec_id",
@@ -68,10 +69,12 @@ object MetadataTables {
     * Manifests open CONCURRENTLY across the whole history. */
   def allFiles(spark: SparkSession, meta: TableMetadata): DataFrame = {
     import spark.implicits._
-    val perSnap = meta.snapshots.flatMap(s =>
-      s.manifestList.toSeq.flatMap(ManifestListReader.read).map(i => (s.snapshotId, i)))
+    // one conf for the pass, resolved on this thread (ManifestWriter.read)
+    val conf = spark.sessionState.newHadoopConf()
+    val perSnap = meta.snapshots.flatMap(s => s.manifestList.toSeq
+      .flatMap(ManifestListReader.read(_, conf)).map(i => (s.snapshotId, i)))
     Par.inParallel(perSnap) { case (sid, i) =>
-      ManifestWriter.read(i.path).filter(_.status != 2).map(e =>
+      ManifestWriter.read(i.path, conf).filter(_.status != 2).map(e =>
         (sid, e.content, e.filePath, e.recordCount, e.fileSizeInBytes,
           e.sequenceNumber.getOrElse(i.sequenceNumber)))
     }.flatten
@@ -132,9 +135,10 @@ object MetadataTables {
               .cast("long").as("record_count"))
       case None => ()
     }
+    val conf = spark.sessionState.newHadoopConf()
     val infos = meta.currentSnapshot.flatMap(_.manifestList).toSeq
-      .flatMap(ManifestListReader.read).filter(_.content == 0)
-    val rows = Par.inParallel(infos)(i => (i, ManifestWriter.read(i.path)))
+      .flatMap(ManifestListReader.read(_, conf)).filter(_.content == 0)
+    val rows = Par.inParallel(infos)(i => (i, ManifestWriter.read(i.path, conf)))
       .map { case (i, es) =>
         val live = es.filter(e => e.status != 2 && e.content == 0)
         (partitionTuple(meta, i), i.specId, live.size.toLong, live.map(_.recordCount).sum)
@@ -148,7 +152,7 @@ object MetadataTables {
   /** One decoded bound pair of the `readable_metrics` column. */
   final case class ReadableMetric(lower_bound: String, upper_bound: String)
 
-  private def entryRows(meta: TableMetadata, snaps: Seq[Snapshot])
+  private def entryRows(spark: SparkSession, meta: TableMetadata, snaps: Seq[Snapshot])
       : Seq[(Long, Int, Long, Long, Int, String, String, Long, Long,
         Map[String, ReadableMetric], Option[String], Option[Long], Option[Long])] = {
     val types = meta.fieldTypes
@@ -166,10 +170,11 @@ object MetadataTables {
           if (lo.isEmpty && hi.isEmpty) None
           else Some(names(id) -> ReadableMetric(lo.orNull, hi.orNull))
         }.toMap
-    val perSnap = snaps.flatMap(s =>
-      s.manifestList.toSeq.flatMap(ManifestListReader.read).map(i => (s.snapshotId, i)))
+    val conf = spark.sessionState.newHadoopConf()
+    val perSnap = snaps.flatMap(s => s.manifestList.toSeq
+      .flatMap(ManifestListReader.read(_, conf)).map(i => (s.snapshotId, i)))
     Par.inParallel(perSnap) { case (sid, i) =>
-      ManifestWriter.read(i.path).map(e =>
+      ManifestWriter.read(i.path, conf).map(e =>
         (sid, e.status, e.snapshotId, e.sequenceNumber.getOrElse(i.sequenceNumber),
           e.content, e.filePath, e.fileFormat, e.recordCount, e.fileSizeInBytes,
           metric(e), e.referencedDataFile, e.contentOffset, e.contentSizeInBytes))
@@ -186,7 +191,7 @@ object MetadataTables {
     * manifest reads, like every other metadata table. */
   def entries(spark: SparkSession, meta: TableMetadata): DataFrame = {
     import spark.implicits._
-    entryRows(meta, meta.currentSnapshot.toSeq)
+    entryRows(spark, meta, meta.currentSnapshot.toSeq)
       .map { case (_, st, sid, seq, c, p, ff, rc, fs, m, rdf, co, cs) =>
         (st, sid, seq, c, p, ff, rc, fs, m, rdf, co, cs) }
       .toDF("status", "snapshot_id", "sequence_number", "content", "file_path",
@@ -199,7 +204,7 @@ object MetadataTables {
     * N times — Iceberg's contract). */
   def allEntries(spark: SparkSession, meta: TableMetadata): DataFrame = {
     import spark.implicits._
-    entryRows(meta, meta.snapshots)
+    entryRows(spark, meta, meta.snapshots)
       .toDF("reference_snapshot_id", "status", "snapshot_id", "sequence_number",
         "content", "file_path", "file_format", "record_count",
         "file_size_in_bytes", "readable_metrics",

@@ -207,12 +207,15 @@ object ScanPlanning {
     * cannot contain the transformed value are skipped WITHOUT BEING OPENED.
     * Spec-id aware (each manifest prunes under ITS spec, the i32 mixed-spec
     * rule); a manifest with no summary, an unknown transform, or an
-    * undecodable bound survives — pruning is conservative. Driver cost is
-    * one KB-scale list read, the same boundary as Iceberg's planner. */
-  def pruneManifestsByTransform(listPath: String, meta: TableMetadata,
-      sourceFieldId: Int, value: Any): Seq[ManifestListReader.ManifestFileInfo] = {
+    * undecodable bound survives — pruning is conservative. `infos` is
+    * the manifest list the caller decoded once for its whole planning
+    * pass: one pass with N pushed predicates reads the list once, not
+    * N + 1 times. */
+  def pruneManifestsByTransform(infos: Seq[ManifestListReader.ManifestFileInfo],
+      meta: TableMetadata, sourceFieldId: Int, value: Any)
+      : Seq[ManifestListReader.ManifestFileInfo] = {
     val sourceType = IcebergTypes.fromString(meta.fieldTypes(sourceFieldId))
-    ManifestListReader.read(listPath).filter { info =>
+    infos.filter { info =>
       val keep = for {
         spec <- meta.partitionSpecs.find(_.specId == info.specId)
         sums <- info.summaries
@@ -249,12 +252,13 @@ object ScanPlanning {
     * cannot overlap it are skipped WITHOUT BEING OPENED. Equality is the
     * degenerate range; bucket specs stay unpruned here (see
     * pruneManifestsByTransform for the equality-in-bucket-space rule).
-    * Conservative on every missing/undecodable piece. */
-  def pruneManifestsByRange(listPath: String, meta: TableMetadata,
-      sourceFieldId: Int, lower: Option[Any], upper: Option[Any])
+    * Conservative on every missing/undecodable piece; `infos` as in
+    * pruneManifestsByTransform. */
+  def pruneManifestsByRange(infos: Seq[ManifestListReader.ManifestFileInfo],
+      meta: TableMetadata, sourceFieldId: Int, lower: Option[Any], upper: Option[Any])
       : Seq[ManifestListReader.ManifestFileInfo] = {
     val sourceType = IcebergTypes.fromString(meta.fieldTypes(sourceFieldId))
-    ManifestListReader.read(listPath).filter { info =>
+    infos.filter { info =>
       val keep = for {
         spec <- meta.partitionSpecs.find(_.specId == info.specId)
         sums <- info.summaries

@@ -178,10 +178,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         import spark.implicits._
         val wantDeletes = ident.name() == "delete_files"
         val wantData = ident.name() == "data_files"
+        val conf = spark.sessionState.newHadoopConf()
         val infos = meta.currentSnapshot.flatMap(_.manifestList).toSeq
-          .flatMap(graft.iceberg.ManifestListReader.read)
+          .flatMap(graft.iceberg.ManifestListReader.read(_, conf))
         graft.iceberg.Par.inParallel(infos)(i =>
-            (i, graft.iceberg.ManifestWriter.read(i.path)))
+            (i, graft.iceberg.ManifestWriter.read(i.path, conf)))
           .flatMap { case (i, es) => es.filter(e => e.status != 2 &&
               (if (wantDeletes) e.content != 0
                else if (wantData) e.content == 0 else true)).map(e =>

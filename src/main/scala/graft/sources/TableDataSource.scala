@@ -373,8 +373,9 @@ class GraftTableScanBuilder(tableSchema: StructType, metadataPath: String,
       if (empty) Nil
       else scala.util.Try {
         val snap = GraftTable.resolveForScan(meta, snapshotId, ref, asOfTimestampMs)
-        val infos = snap.manifestList.toSeq.flatMap(ManifestListReader.read)
-        val live = Par.inParallel(infos)(i => ManifestWriter.read(i.path)
+        val conf = graft.iceberg.HadoopConfs.active()
+        val infos = snap.manifestList.toSeq.flatMap(ManifestListReader.read(_, conf))
+        val live = Par.inParallel(infos)(i => ManifestWriter.read(i.path, conf)
           .filter(_.status != 2).map(e => (i.content, e))).flatten
         // any live delete entry → rows are unknowable from stats
         if (live.exists(_._2.content != 0)) return None
@@ -517,9 +518,10 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     if (emptyTable) Nil
     else {
       val snap = GraftTable.resolveForScan(pinnedMeta, snapshotId, ref, asOfTimestampMs)
-      val infos = snap.manifestList.toSeq.flatMap(ManifestListReader.read)
+      val conf = hadoopConf.value
+      val infos = snap.manifestList.toSeq.flatMap(ManifestListReader.read(_, conf))
         .filter(_.content == 1)
-      Par.inParallel(infos)(i => ManifestWriter.read(i.path))
+      Par.inParallel(infos)(i => ManifestWriter.read(i.path, conf))
         .flatten.filter(_.status != 2).map(_.filePath)
     }
 
@@ -571,7 +573,11 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val snap = GraftTable.resolveForScan(meta, snapshotId, ref, asOfTimestampMs)
     val listPath = snap.manifestList.getOrElse(throw new IllegalArgumentException(
       s"snapshot ${snap.snapshotId} has no manifest-list"))
-    val infos = ManifestListReader.read(listPath)
+    // one Hadoop conf for the whole pass, resolved when the scan was
+    // built on the planning thread: the pool threads below never copy
+    // the session conf or look up an active session
+    val conf = hadoopConf.value
+    val infos = ManifestListReader.read(listPath, conf)
     val dataInfos0 = infos.filter(_.content == 0)
     // level 1: pushed predicates prune manifests in the spec's transform
     // space (summaries consulted, manifests unopened). Equality prunes
@@ -597,20 +603,20 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
       }
     val afterEq = eqPairs.foldLeft(infos.map(_.path).toSet) {
       case (acc, (fid, v)) =>
-        acc.intersect(ScanPlanning.pruneManifestsByTransform(listPath, meta, fid, v)
+        acc.intersect(ScanPlanning.pruneManifestsByTransform(infos, meta, fid, v)
           .map(_.path).toSet)
     }
     val afterIn = inSets.foldLeft(afterEq) { case (acc, (fid, vs)) =>
       acc.intersect(vs.map(v =>
-        ScanPlanning.pruneManifestsByTransform(listPath, meta, fid, v)
+        ScanPlanning.pruneManifestsByTransform(infos, meta, fid, v)
           .map(_.path).toSet).reduce(_ union _))
     }
     val surviving = ranges.foldLeft(afterIn) { case (acc, (fid, lo, hi)) =>
-      acc.intersect(ScanPlanning.pruneManifestsByRange(listPath, meta, fid, lo, hi)
+      acc.intersect(ScanPlanning.pruneManifestsByRange(infos, meta, fid, lo, hi)
         .map(_.path).toSet)
     }
     val dataEntries = Par.inParallel(dataInfos0.filter(i => surviving(i.path)))(
-        i => (i, ManifestWriter.read(i.path))).flatMap { case (i, es) =>
+        i => (i, ManifestWriter.read(i.path, conf))).flatMap { case (i, es) =>
       es.filter(e => e.status != 2 && e.content == 0)
         .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber), i))
     }
@@ -628,7 +634,7 @@ class GraftTableScan(required: StructType, filters: Array[sources.Filter],
     val minKeptSeq = kept.map(_._2).minOption.getOrElse(Long.MaxValue)
     val delInfos = infos.filter(i => i.content == 1 && surviving(i.path) &&
       i.sequenceNumber >= minKeptSeq)
-    val delEntries = Par.inParallel(delInfos)(i => (i, ManifestWriter.read(i.path)))
+    val delEntries = Par.inParallel(delInfos)(i => (i, ManifestWriter.read(i.path, conf)))
       .flatMap { case (i, es) => es.filter(_.status != 2)
         .map(e => (e, e.sequenceNumber.getOrElse(i.sequenceNumber))) }
     (kept, delEntries.filter(_._1.content == 1), delEntries.filter(_._1.content == 2))

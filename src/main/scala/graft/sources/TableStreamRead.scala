@@ -163,9 +163,9 @@ class GraftTableMicroBatchStream(metadataPath: String, required: StructType,
           val list = snap.manifestList.getOrElse(throw new IllegalStateException(
             s"snapshot ${snap.snapshotId} has no manifest list"))
           // delta-proportional planning: only THIS snapshot's manifests open
-          val added = ManifestListReader.read(list)
+          val added = ManifestListReader.read(list, hadoopConf.value)
             .filter(i => i.content == 0 && i.addedSnapshotId == snap.snapshotId)
-          Par.inParallel(added)(i => ManifestWriter.read(i.path)).flatten
+          Par.inParallel(added)(i => ManifestWriter.read(i.path, hadoopConf.value)).flatten
             .filter(en => en.status == 1 && en.content == 0 &&
               en.snapshotId == snap.snapshotId)
             .map(en => GraftTableInputPartition(en.filePath, snap.snapshotId,

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * technique third-party Spark extensions use for exactly this purpose
   * (SparkSessionExtensions lets us inject the strategy but offers no
   * public constructor for a Dataset over an injected logical node).
-  * Nothing else from the private surface is touched.
+  * The other doorways below are the same kind: one private[sql] entry
+  * each, nothing more of the private surface.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -26,4 +27,20 @@ object GraftSqlShim {
     * expression, for embedding as a child of a custom expression. */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** A JSON row writer configured exactly as `Dataset.toJSON` configures
+    * its own (default options, the session's local time zone) — for
+    * rendering InternalRows in the Spark driver byte-identically to a `toJSON`
+    * collect without running a job. `JacksonGenerator` is `private[sql]`,
+    * same doorway rationale as [[ofRows]]. */
+  def jsonWriter(spark: SparkSession, schema: types.StructType,
+      writer: java.io.Writer): catalyst.InternalRow => Unit = {
+    val conf = spark.sessionState.conf
+    // the options read their defaults from SQLConf.get: pin the session's
+    val gen = internal.SQLConf.withExistingConf(conf) {
+      new catalyst.json.JacksonGenerator(schema, writer,
+        new catalyst.json.JSONOptions(Map.empty[String, String], conf.sessionLocalTimeZone))
+    }
+    row => { gen.write(row); gen.flush() }
+  }
 }

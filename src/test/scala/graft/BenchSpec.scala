@@ -93,6 +93,22 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.loadBands(p.toString).isEmpty)
   }
 
+  test("loadBands drops one malformed entry, keeps the rest, and notes an empty parse") {
+    val p = java.nio.file.Files.createTempFile("graft-band-bad", ".json")
+    java.nio.file.Files.writeString(p,
+      """{"metric":"total","queries":{"q01_agg":0.2122,"q02_filter":1.2.3,""" +
+        """"d03_minhash_dedup":0.8931},"sf":"sf0.1"}""")
+    assert(Bench.loadBands(p.toString) ==
+      Map("q01_agg" -> 0.2122, "d03_minhash_dedup" -> 0.8931))
+    java.nio.file.Files.writeString(p, """{"queries":{"q01_agg":1.2.3}}""")
+    val err = new java.io.ByteArrayOutputStream()
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try assert(Bench.loadBands(p.toString).isEmpty)
+    finally System.setErr(prev)
+    assert(err.toString("UTF-8").contains("parsed to no entries"), err.toString("UTF-8"))
+  }
+
   test("keys drop leading zeros but stay unique across all entries") {
     assert(Bench.shortKey("q01_agg") === "q1")
     assert(Bench.shortKey("st09_foreach_batch_sink") === "st9")
